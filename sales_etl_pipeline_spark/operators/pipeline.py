@@ -4,10 +4,13 @@ extract → transform → load contract and ``get_summary()`` surface, over
 lazy Spark DataFrames instead of eager pandas.
 
 Key inversion vs the reference (SURVEY.md §3.4): ``transform()`` here is
-FREE — it only composes logical plans. Work happens at ``load()`` (the
-write actions) and ``get_summary()`` (counts). The reference's four
+FREE — it only composes logical plans. Work happens at ``load()``, whose
+write actions compute each output plan once; each plan re-reads its own
+sources (no cache is shared between them). The reference's four
 independent summary builders (etl.py:251-254) run serially in pandas;
-here they are independent Spark jobs sharing the cached cleaned relation.
+here the five output tables are written concurrently, and their row
+counts ride those writes, so ``get_summary()`` after ``load()`` runs no
+job.
 """
 
 from __future__ import annotations
@@ -17,7 +20,7 @@ import os
 import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..plans import parity
 from ..sources.readers import load_star
@@ -40,15 +43,11 @@ class AnalyticsPipeline:
     """
 
     def __init__(self, spark: SparkSession, source_dir: str, output_dir: str,
-                 log_counts: bool = False, observe_counts: bool = False):
+                 log_counts: bool = False):
         self.spark = spark
         self.source_dir = source_dir
         self.output_dir = output_dir
         self.log_counts = log_counts
-        #: zero-cost alternative to log_counts: attach an ``Observation``
-        #: to each output plan so row counts ride the load() write action
-        #: itself — no second pass over the data, unlike count() jobs.
-        self.observe_counts = observe_counts
         self.raw_tables: dict[str, DataFrame] | None = None
         self.transformed_data: dict[str, DataFrame] | None = None
         self._observations: dict = {}
@@ -71,29 +70,24 @@ class AnalyticsPipeline:
         only — no jobs run until load()/get_summary()."""
         if self.raw_tables is None:
             raise RuntimeError("No data to transform. Run extract() first.")
-        cleaned = parity.clean_transactions(self.spark, self.source_dir)
-        self.transformed_data = {
+        plans = {
             "customer_summary": parity.customer_summary(self.spark, self.source_dir),
             "product_summary": parity.product_summary(self.spark, self.source_dir),
             "daily_sales": parity.daily_sales_moving_avg(self.spark, self.source_dir),
             "country_summary": parity.country_summary(self.spark, self.source_dir),
-            "transactions": cleaned,
+            "transactions": parity.clean_transactions(self.spark, self.source_dir),
         }
-        if self.observe_counts:
-            # The reference pays a full extra pass for every logged count
-            # (pandas len() is free; Spark count() is a job — SURVEY
-            # §3.4). df.observe() instead accumulates metrics DURING the
-            # next action over the plan: load() writes the table and the
-            # row count falls out of the same job. observed_counts()
-            # reads them afterwards.
-            from pyspark.sql import Observation, functions as F
-
-            observed = {}
-            for name, df in self.transformed_data.items():
-                obs = Observation(f"rows_{name}")
-                observed[name] = df.observe(obs, F.count(F.lit(1)).alias("n"))
-                self._observations[name] = obs
-            self.transformed_data = observed
+        # The reference pays a full extra pass for every logged count
+        # (pandas len() is free; Spark count() is a job — SURVEY §3.4).
+        # df.observe() instead accumulates metrics DURING the next action
+        # over the plan: load() writes the table and the row count falls
+        # out of the same job. observed_counts() reads them afterwards.
+        self._observations = {name: Observation(f"rows_{name}") for name in plans}
+        self._loaded = False
+        self.transformed_data = {
+            name: df.observe(self._observations[name], F.count(F.lit(1)).alias("n"))
+            for name, df in plans.items()
+        }
         logger.info("transform: composed %d output plans (no jobs yet)",
                     len(self.transformed_data))
         if self.log_counts:
@@ -225,10 +219,9 @@ class AnalyticsPipeline:
         }
 
     def get_summary(self) -> dict:
-        """Row counts per output table (reference etl.py:415-422). Counts
-        are jobs; summaries are aggregate-grain so each is cheap. With
-        ``observe_counts`` and a completed load(), prefers the observed
-        metrics — zero extra jobs."""
+        """Row counts per output table (reference etl.py:415-422). After
+        load() they are the counts observed by its writes — zero jobs;
+        before it, one count job per table."""
         if self.transformed_data is None:
             return {"status": "No data transformed yet"}
         observed = self.observed_counts()

@@ -163,16 +163,19 @@ def _id_space_guard(media: DataFrame, *cols: str) -> DataFrame:
 #: ``.rdd.getNumPartitions()`` builds a full physical plan — measured
 #: ~0.3 s per corpus construction even warm — and its answer is a pure
 #: function of (the documents table's on-disk file layout, the builder's
-#: branch count, the cluster width). Key = that triple (file names +
-#: sizes + mtimes), so a rewritten corpus at the same path re-probes;
+#: branch count, the cluster width, the reader confs that split files
+#: into scan partitions). Key = those (file names + sizes + mtimes) plus
+#: the application id, so a rewritten corpus at the same path, or a
+#: session with other reader confs or another SparkContext, re-probes;
 #: value = the spread DECISION only (a bool — no data, no plan, nothing
 #: the bench's clearCache contract could care about).
 _SPREAD_MEMO: dict = {}
 
 
 def _corpus_layout_key(spark: SparkSession, sf_dir: str, tag: str):
-    """(tag, path, file listing, cluster width) — None when the listing
-    is unavailable (caller then probes unconditionally)."""
+    """(tag, path, file listing, cluster width, scan-split reader confs,
+    application id) — None when the listing is unavailable (caller then
+    probes unconditionally)."""
     path = os.path.join(sf_dir, "documents.parquet")
     try:
         if os.path.isdir(path):
@@ -188,8 +191,12 @@ def _corpus_layout_key(spark: SparkSession, sf_dir: str, tag: str):
             files = (("", st.st_size, st.st_mtime_ns),)
     except OSError:
         return None
-    par = spark.sparkContext.defaultParallelism
-    return (tag, os.path.realpath(path), files, par)
+    sc = spark.sparkContext
+    readers = tuple(
+        spark.conf.get(k)
+        for k in ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    )
+    return (tag, os.path.realpath(path), files, sc.defaultParallelism, readers, sc.applicationId)
 
 
 def _spread_corpus(df: DataFrame, memo_key=None) -> DataFrame:

@@ -8,10 +8,14 @@ keep their partitioning.
 
 from __future__ import annotations
 
+import contextlib
 import os
+import threading
+from concurrent.futures import ThreadPoolExecutor
 
 import pandas as pd  # module-scope: pandas_udf type hints resolve here
 from pyspark.sql import DataFrame, functions as F
+from pyspark.util import inheritable_thread_target
 
 
 def _lowercase_columns(df: DataFrame) -> DataFrame:
@@ -306,16 +310,24 @@ def write_bucketed(
     )
 
 
+#: one writer at a time per process: sqlite allows a single writer per
+#: database file, and save_tables fans tables out on threads that all
+#: target the same ``.db``
+_SQLITE_LOCK = threading.Lock()
+
+
 def write_sqlite(df: DataFrame, db_path: str, table: str) -> None:
     """K3 (etl.py:292-303). Summary tables are driver-collectable by design
     (§4.3 invariant: sinks of this kind only receive aggregated relations);
-    we go through Arrow→pandas→sqlite3 which are all in-container."""
+    we go through Arrow→pandas→sqlite3 which are all in-container. The
+    Spark collect runs unlocked; only the sqlite write holds the lock."""
     os.makedirs(os.path.dirname(db_path) or ".", exist_ok=True)
     import sqlite3
 
     pdf = df.toPandas()
-    with sqlite3.connect(db_path) as conn:
+    with _SQLITE_LOCK, contextlib.closing(sqlite3.connect(db_path)) as conn:
         pdf.to_sql(table, conn, if_exists="replace", index=False)
+        conn.commit()
 
 
 def write_jdbc(df: DataFrame, url: str, table: str, properties: dict | None = None, round_scale: int | None = None) -> None:
@@ -334,38 +346,64 @@ def write_jdbc(df: DataFrame, url: str, table: str, properties: dict | None = No
     writer.save()
 
 
+#: formats save_tables can write; every one but sqlite is a directory
+#: ``<table>.<format>`` under the output dir
+SINK_FORMATS = ("csv", "parquet", "sqlite", "json", "orc")
+
+
+def _sink_path(output_dir: str, fmt: str, name: str) -> str:
+    if fmt == "sqlite":
+        return os.path.join(output_dir, "sales_data.db")
+    return os.path.join(output_dir, f"{name}.{fmt}")
+
+
+def _write_table(df: DataFrame, output_dir: str, name: str, formats: list[str]) -> None:
+    """Every requested sink of one table, computing its plan once: the
+    parquet sink is written first and every other format reads it back
+    with the plan's schema (no inference job). Without parquet, each
+    format writes from the plan."""
+    if "parquet" in formats:
+        path = _sink_path(output_dir, "parquet", name)
+        write_parquet(df, path)
+        df = df.sparkSession.read.schema(df.schema).parquet(path)
+    for fmt in formats:
+        path = _sink_path(output_dir, fmt, name)
+        if fmt == "csv":
+            write_csv(df, path)
+        elif fmt == "sqlite":
+            write_sqlite(df, path, name)
+        elif fmt == "json":
+            write_json(df, path)
+        elif fmt == "orc":
+            write_orc(df, path)
+
+
 def save_tables(tables: dict[str, DataFrame], output_dir: str, formats: list[str] | None = None) -> dict[str, list[str]]:
     """K6 dispatcher (etl.py:364-386): fan a dict-catalog out to sinks.
 
     Default formats mirror the reference's ``['csv','parquet','sqlite']``.
-    Returns {format: [written paths/tables]}.
+    Each table's plan is computed once: its parquet sink is written
+    first (when requested) and the other formats are written from that
+    file. The tables fan out concurrently, one thread each; the threads
+    inherit the caller's job group and local properties, and sqlite
+    writes take turns on the shared ``sales_data.db``. Every started
+    write finishes before the first failure (in table order) is raised.
+    Returns {format: [written paths/tables]}, in ``formats`` and table
+    order.
     """
     formats = formats or ["csv", "parquet", "sqlite"]
-    os.makedirs(output_dir, exist_ok=True)
-    written: dict[str, list[str]] = {}
     for fmt in formats:
-        paths: list[str] = []
-        for name, df in tables.items():
-            if fmt == "csv":
-                path = os.path.join(output_dir, f"{name}.csv")
-                write_csv(df, path)
-            elif fmt == "parquet":
-                path = os.path.join(output_dir, f"{name}.parquet")
-                write_parquet(df, path)
-            elif fmt == "sqlite":
-                path = os.path.join(output_dir, "sales_data.db")
-                write_sqlite(df, path, name)
-            elif fmt == "json":
-                path = os.path.join(output_dir, f"{name}.json")
-                write_json(df, path)
-            elif fmt == "orc":
-                path = os.path.join(output_dir, f"{name}.orc")
-                write_orc(df, path)
-            else:
-                raise ValueError(f"Unknown sink format: {fmt!r} (jdbc sinks go through write_jdbc)")
-            paths.append(path)
-        written[fmt] = paths
-    return written
+        if fmt not in SINK_FORMATS:
+            raise ValueError(f"Unknown sink format: {fmt!r} (jdbc sinks go through write_jdbc)")
+    os.makedirs(output_dir, exist_ok=True)
+    with ThreadPoolExecutor(max_workers=max(1, len(tables))) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(df.sparkSession)(_write_table), df, output_dir, name, formats)
+            for name, df in tables.items()
+        ]
+    for future in futures:
+        future.result()
+    return {fmt: [_sink_path(output_dir, fmt, name) for name in tables] for fmt in formats}
 
 
 def write_epoch_shards(df: DataFrame, path: str, n_shards: int) -> None:

@@ -23,7 +23,8 @@ import bench  # noqa: E402  (the target repo's bench module)
 
 def _steal_jiffies() -> int:
     try:
-        return int(open("/proc/stat").readline().split()[8])
+        with open("/proc/stat") as f:
+            return int(f.readline().split()[8])
     except Exception:
         return 0
 
@@ -36,13 +37,16 @@ def _stealaware(spark, fn, sf_dir, ncpu):
     dt = max(time.time() - t0, 1e-9)
     return w, round((_steal_jiffies() - s0) / 100.0 / (ncpu * dt), 3)
 
-spark = bench.get_spark(app_name="timeq")
-spark.sparkContext.setLogLevel("ERROR")
 allq = {
     **bench.plans.all_queries(),
     **bench.plans.library_queries(),
     **bench.EXTRA_QUERIES,
 }
+unknown = [n for n in names if n not in allq]
+if unknown:
+    sys.exit(f"timeq: unknown query name(s): {', '.join(unknown)}")
+spark = bench.get_spark(app_name="timeq")
+spark.sparkContext.setLogLevel("ERROR")
 sf_small = "/root/testdata/sf0.001"
 sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 ncpu = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))

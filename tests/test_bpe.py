@@ -249,38 +249,22 @@ def _py_batched_bpe(word_freqs, n_merges, batch_size, admission="prefix", init=l
     return merges, seqs
 
 
-def test_batched_matches_python_replay_oracle(spark):
+@pytest.mark.parametrize("n_merges, batch_size", [(24, 8), (16, 1)])
+def test_batched_matches_python_replay_oracle(spark, n_merges, batch_size):
     """The batched path's own exactness gate: Spark's batched training
     (admission + chained-replace application) must match the pure-Python
-    replay bit-for-bit — merge list AND every word's final segmentation."""
-    from sales_etl_pipeline_spark.sources.readers import load_table
+    replay bit-for-bit — merge list AND every word's final segmentation.
 
-    docs = load_table(spark, SF, "documents")
-    import re
-
-    freqs = {}
-    for r in docs.select("text").collect():
-        for w in re.findall("[a-z]+", r.text.lower()):
-            freqs[w] = freqs.get(w, 0) + 1
-    want_merges, want_seqs = _py_batched_bpe(freqs, 24, 8)
-    got_merges, got_seqs = bpe.train_bpe(spark, SF, 24, batch_size=8)
-    assert got_merges == want_merges
-    got = {
-        r.word: r.seq.strip("_").split("__") for r in got_seqs.collect()
-    }
-    assert got == {w: t for w, t in want_seqs.items()}
-
-
-def test_incremental_counts_match_full_recount_replay(spark):
-    """r17 focused gate for the INCREMENTAL pair-count maintenance in
-    _train_rounds (counts_new = counts_old − pairs(changed, old) +
-    pairs(changed, new)): the pure-Python oracle recounts EVERY pair
-    from scratch each round, so bit-equality of the merge list and every
-    final segmentation over a many-round sequential run is exactly the
-    maintained-vs-recounted equivalence claim. Sequential mode (one
-    merge per round) maximizes the number of maintenance steps the
-    equality must survive; zero-drop and fresh-creation edges are
-    additionally pinned by test_train_raises_when_pairs_exhaust."""
+    (16, 1) is the focused gate for the INCREMENTAL pair-count
+    maintenance in _train_rounds (counts_new = counts_old −
+    pairs(changed, old) + pairs(changed, new)): the pure-Python oracle
+    recounts EVERY pair from scratch each round, so bit-equality of the
+    merge list and every final segmentation over a many-round sequential
+    run is exactly the maintained-vs-recounted equivalence claim.
+    Sequential mode (one merge per round) maximizes the number of
+    maintenance steps the equality must survive; zero-drop and
+    fresh-creation edges are additionally pinned by
+    test_train_raises_when_pairs_exhaust."""
     import re
 
     from sales_etl_pipeline_spark.sources.readers import load_table
@@ -290,8 +274,8 @@ def test_incremental_counts_match_full_recount_replay(spark):
     for r in docs.select("text").collect():
         for w in re.findall("[a-z]+", r.text.lower()):
             freqs[w] = freqs.get(w, 0) + 1
-    want_merges, want_seqs = _py_batched_bpe(freqs, 16, 1)
-    got_merges, got_seqs = bpe.train_bpe(spark, SF, 16, batch_size=1)
+    want_merges, want_seqs = _py_batched_bpe(freqs, n_merges, batch_size)
+    got_merges, got_seqs = bpe.train_bpe(spark, SF, n_merges, batch_size=batch_size)
     assert got_merges == want_merges
     got = {r.word: r.seq.strip("_").split("__") for r in got_seqs.collect()}
     assert got == {w: t for w, t in want_seqs.items()}

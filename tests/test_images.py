@@ -466,3 +466,19 @@ def test_phash_fixed_exact_on_generic_grids():
     fxd = phash_fixed_kernel(grids, [None] * 64)
     agree = sum(a == b for a, b in zip(flt, fxd))
     assert agree >= 62, agree  # allow <=2 borderline-median grids
+
+
+def test_spread_memo_key_tracks_reader_confs_and_session(spark, sf_dir):
+    """The spread decision depends on how files split into scan
+    partitions, so the memo key carries the split confs and the
+    application: another maxPartitionBytes must re-probe."""
+    conf = "spark.sql.files.maxPartitionBytes"
+    key = images._corpus_layout_key(spark, sf_dir, "t")
+    assert key is not None and spark.sparkContext.applicationId in key
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "1m")
+    try:
+        assert images._corpus_layout_key(spark, sf_dir, "t") != key
+    finally:
+        spark.conf.set(conf, old)
+    assert images._corpus_layout_key(spark, sf_dir, "t") == key

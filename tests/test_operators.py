@@ -4,6 +4,9 @@ and self-consistency instead)."""
 
 from __future__ import annotations
 
+import contextlib
+import datetime
+import math
 import os
 import sys
 
@@ -501,6 +504,30 @@ def test_json_orc_sinks_roundtrip(spark, tmp_path):
     assert got_orc == want
 
 
+def test_save_tables_fans_out_every_format(spark, tmp_path):
+    """save_tables returns {format: [path per table]} in formats and
+    table order; json/orc written from the parquet read-back hold the
+    plan's rows; an unknown format fails before any write."""
+    from sales_etl_pipeline_spark.sources import writers
+
+    nation = load_table(spark, SF, "nation").select("n_nationkey", "n_name")
+    tables = {"low": nation.filter("n_nationkey < 10"), "high": nation.filter("n_nationkey >= 10")}
+    out = str(tmp_path)
+    written = writers.save_tables(tables, out, ["json", "parquet", "orc"])
+    assert written == {
+        fmt: [os.path.join(out, f"{name}.{fmt}") for name in tables]
+        for fmt in ("json", "parquet", "orc")
+    }
+    for name, df in tables.items():
+        want = sorted(map(tuple, df.collect()))
+        for fmt in ("json", "orc"):
+            back = spark.read.format(fmt).load(os.path.join(out, f"{name}.{fmt}"))
+            assert sorted(map(tuple, back.select(*df.columns).collect())) == want
+    with pytest.raises(ValueError, match="Unknown sink format"):
+        writers.save_tables(tables, str(tmp_path / "none"), ["csv", "xlsx"])
+    assert not os.path.exists(tmp_path / "none")
+
+
 def test_parquet_schema_evolution_merge(spark, tmp_path):
     """Operational surface for corpus growth: a later ingest adds a column;
     mergeSchema reads must surface the union schema with NULLs for old
@@ -679,15 +706,13 @@ def test_variant_surfaces(spark):
 
 
 def test_observed_counts_ride_the_write(spark, tmp_path):
-    """observe_counts: row counts come from Observations attached to the
-    output plans — captured by the load() write jobs themselves, no
-    count() jobs afterwards — and must equal the plain count() numbers."""
+    """Row counts come from Observations attached to the output plans —
+    captured by the load() write jobs themselves, no count() jobs
+    afterwards — and must equal the plain count() numbers."""
     from sales_etl_pipeline_spark.operators.pipeline import AnalyticsPipeline
 
     sf = "/root/testdata/sf0.001"
-    pipe = AnalyticsPipeline(
-        spark, sf, str(tmp_path / "out"), observe_counts=True
-    )
+    pipe = AnalyticsPipeline(spark, sf, str(tmp_path / "out"))
     pipe.extract()
     pipe.transform()
     assert pipe.observed_counts() == {}  # nothing ran yet — must not block
@@ -699,6 +724,115 @@ def test_observed_counts_ride_the_write(spark, tmp_path):
     want = {name: df.count() for name, df in plain.transformed_data.items()}
     assert observed == want
     assert pipe.get_summary() == want
+
+
+SINK_TABLES = (
+    "customer_summary",
+    "product_summary",
+    "daily_sales",
+    "country_summary",
+    "transactions",
+)
+
+
+def _group_jobs(spark, group: str, action) -> int:
+    """Run ``action`` under job group ``group``; return how many Spark
+    jobs the group submitted (pool threads included, if they inherited
+    the group)."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job events reach the status store through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _transformed(spark, out: str) -> AnalyticsPipeline:
+    pipe = AnalyticsPipeline(spark, SF, out)
+    pipe.extract()
+    pipe.transform()
+    return pipe
+
+
+def _sqlite_value(v):
+    """A collected Spark value as sqlite3 hands it back (pandas.to_sql
+    stores dates/timestamps as ISO text, booleans as 0/1, NaN as NULL)."""
+    if isinstance(v, float) and math.isnan(v):
+        return None
+    if isinstance(v, bool):
+        return int(v)
+    if isinstance(v, (datetime.date, datetime.datetime)):
+        return str(v)
+    return v
+
+
+def test_sinks_hold_identical_rows(spark, tmp_path):
+    """csv/sqlite are written from the parquet sink: sqlite holds the
+    parquet rows exactly, csv the same header and row count."""
+    import csv
+    import glob
+    import sqlite3
+    from collections import Counter
+
+    out = str(tmp_path)
+    _transformed(spark, out).load(["csv", "parquet", "sqlite"])
+    with contextlib.closing(sqlite3.connect(os.path.join(out, "sales_data.db"))) as db:
+        for table in SINK_TABLES:
+            parquet = spark.read.parquet(os.path.join(out, f"{table}.parquet"))
+            want = Counter(tuple(map(_sqlite_value, r)) for r in parquet.collect())
+            cur = db.execute(f'SELECT * FROM "{table}"')
+            assert [c[0] for c in cur.description] == parquet.columns
+            assert Counter(cur.fetchall()) == want, table
+            (part,) = glob.glob(os.path.join(out, f"{table}.csv", "*.csv"))
+            with open(part, newline="") as f:
+                rows = list(csv.reader(f))
+            assert rows[0] == parquet.columns
+            assert len(rows) - 1 == sum(want.values())
+
+
+def test_load_computes_each_table_once(spark, tmp_path):
+    """Compute once: adding csv and sqlite to the parquet sink costs at
+    most two jobs per table (each a write from the parquet file). The
+    lower bound proves the job group reaches the fan-out threads: jobs
+    that lost it would be missing from the counts."""
+    _transformed(spark, str(tmp_path / "warm")).load(["parquet"])  # cold-session jobs
+    only_parquet = _transformed(spark, str(tmp_path / "a"))
+    n_parquet = _group_jobs(spark, f"parquet-{id(only_parquet)}", lambda: only_parquet.load(["parquet"]))
+    pipe = _transformed(spark, str(tmp_path / "b"))
+    n_all = _group_jobs(spark, f"all-{id(pipe)}", lambda: pipe.load(["csv", "parquet", "sqlite"]))
+    assert n_parquet >= len(SINK_TABLES)
+    assert n_parquet + len(SINK_TABLES) <= n_all <= n_parquet + 2 * len(SINK_TABLES)
+
+
+def test_summary_after_load_runs_no_job(spark, tmp_path):
+    pipe = _transformed(spark, str(tmp_path))
+    pipe.load(["csv", "parquet", "sqlite"])
+    counts = {}
+    n = _group_jobs(spark, f"summary-{id(pipe)}", lambda: counts.update(pipe.get_summary()))
+    assert n == 0
+    assert set(counts) == set(SINK_TABLES) and all(v > 0 for v in counts.values())
+
+
+def test_failing_sink_raises_from_load(spark, tmp_path):
+    """A sink that cannot be written (a directory where the sqlite file
+    must go) fails the load instead of hanging or passing, and every
+    table's other writes still finish."""
+    import concurrent.futures
+    import sqlite3
+
+    out = tmp_path / "out"
+    (out / "sales_data.db").mkdir(parents=True)
+    pipe = _transformed(spark, str(out))
+    with concurrent.futures.ThreadPoolExecutor(1) as pool:
+        run = pool.submit(pipe.load, ["csv", "parquet", "sqlite"])
+        with pytest.raises(sqlite3.OperationalError):
+            run.result(timeout=300)
+    for table in SINK_TABLES:
+        assert os.path.isdir(out / f"{table}.csv")
+        assert os.path.isdir(out / f"{table}.parquet")
 
 
 def test_ingest_batch_replay_is_idempotent(spark, tmp_path):
